@@ -49,7 +49,8 @@ def widen_narrow_scan(df: DataFrame, path: str) -> DataFrame:
     thousands of scan tasks and must NOT pay a blanket repartition, so
     the round-robin spread applies only when the on-disk size says the
     scan cannot reach the session's parallelism on its own
-    (bytes / 128 MB-split estimate < defaultParallelism). Deterministic
+    (bytes / 128 MB-split estimate < the repartition width below, so an
+    input already that wide never pays a narrowing shuffle). Deterministic
     and value-neutral: repartition() round-robin sorts its input first
     (SPARK-23207), and only row placement changes, never row content."""
     spark = df.sparkSession
@@ -65,7 +66,8 @@ def widen_narrow_scan(df: DataFrame, path: str) -> DataFrame:
             size = os.path.getsize(path)
     except OSError:
         return df
-    if max(1, size // _WIDEN_SPLIT_BYTES) >= target:
+    width = max(2, target // 2)
+    if max(1, size // _WIDEN_SPLIT_BYTES) >= width:
         return df
     # Half the session's parallelism, not all of it (r11, guide §2.2/§2.6):
     # the spread exists so heavy per-row scan work stops serializing on one
@@ -76,14 +78,16 @@ def widen_narrow_scan(df: DataFrame, path: str) -> DataFrame:
     # runs ALONE; under the engine's concurrent scheduler they run in waves
     # anyway, so the extra tasks are pure per-task/shuffle-block overhead
     # (M×R block growth). Still session-derived — never a local constant.
-    return df.repartition(max(2, target // 2))
+    return df.repartition(width)
 
 
 def normalize_column_name(name: str) -> str:
     """dlt-style column-name standardization (reference:
     pipelines/quickbooks/pipeline.py:151-154): strip, '/'→'_', ' '→'_', drop '.',
-    plus lowercase + collapse repeats for a canonical snake_case form."""
-    out = name.strip().replace("/", "_").replace(" ", "_").replace(".", "")
+    plus lowercase + collapse repeats for a canonical snake_case form. The
+    strip runs after the '.' drop, so whitespace that a dropped leading or
+    trailing '.' exposes goes too and the function is idempotent."""
+    out = name.replace(".", "").strip().replace("/", "_").replace(" ", "_")
     out = re.sub(r"_+", "_", out)
     return out.lower()
 

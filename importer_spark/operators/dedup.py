@@ -416,8 +416,9 @@ def duplicate_ngram_spans(
     that occur in >= min_docs distinct documents.
 
     Plan shape (the suffix-array-free 100 TB formulation):
-      1. ONE window pass per document builds position-stamped n-grams via
-         posexplode + (n-1) leads — no per-row arrays, stays in codegen.
+      1. position_ngrams stamps each n-gram with its position without a
+         shuffle: explode a 0..size−n sequence and read the n adjacent
+         tokens with element_at, all in the scan's codegen stage.
       2. Grams shuffle ONCE on a 128-bit key: two independently-seeded
          xxhash64 longs (16 bytes instead of the ~n*avg_token gram text;
          jointly collision-free at any realistic corpus — a single 64-bit

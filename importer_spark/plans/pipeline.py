@@ -50,9 +50,7 @@ def run_source_load(
     if mode == "seed":
         delta = source
     elif mode == "incremental":
-        delta = cursor_incremental_batch(
-            spark, source, cursor_col, state_path, auto_commit=False
-        )
+        delta = cursor_incremental_batch(spark, source, cursor_col, state_path)
     else:
         raise ValueError(f"unknown mode {mode!r}; use 'seed' or 'incremental'")
     n = delta.count()

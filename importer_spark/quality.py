@@ -4,8 +4,10 @@ The reference validates with dbt schema tests (unique / not_null /
 accepted_values — ~340 of them), singular SQL tests (fail if query returns
 rows), and Python runtime checks (row counts, freshness, duplicate PKs:
 pipelines/shared/data_quality.py:17-216). This module is the Spark analog:
-each check computes a violation COUNT distributed-side (never collects rows)
-and raises ``QualityError`` with a sample on failure.
+each check computes a violation COUNT distributed-side (never collects rows).
+The dbt schema-test kinds have one evaluator, ``_violation_expr``, reached
+through ``run_suite`` (counts) and ``assert_suite`` (raises
+``QualityError``).
 """
 
 from __future__ import annotations
@@ -22,44 +24,6 @@ def _fail(name: str, detail: str):
     raise QualityError(f"quality check failed: {name} — {detail}")
 
 
-def assert_not_null(df: DataFrame, cols: list[str]) -> None:
-    agg = df.agg(
-        *[F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in cols]
-    ).first()
-    bad = {c: agg[c] for c in cols if agg[c] > 0}
-    if bad:
-        _fail("not_null", f"null counts {bad}")
-
-
-def assert_unique(df: DataFrame, cols: list[str]) -> None:
-    dups = df.groupBy(*cols).count().filter(F.col("count") > 1)
-    n = dups.count()
-    if n:
-        sample = [r.asDict() for r in dups.limit(5).collect()]
-        _fail("unique", f"{n} duplicated keys on {cols}; sample {sample}")
-
-
-def assert_accepted_values(df: DataFrame, col: str, values: list) -> None:
-    bad = df.filter(~F.col(col).isin(values) | F.col(col).isNull()).select(col).distinct()
-    n = bad.count()
-    if n:
-        sample = [r[0] for r in bad.limit(10).collect()]
-        _fail("accepted_values", f"{col} has {n} unexpected values; sample {sample}")
-
-
-def assert_row_count_between(df: DataFrame, lo: int, hi: int | None = None) -> None:
-    n = df.count()
-    if n < lo or (hi is not None and n > hi):
-        _fail("row_count", f"count {n} outside [{lo}, {hi}]")
-
-
-def assert_expression(df: DataFrame, expr: str, name: str = "expression") -> None:
-    """dbt_utils.expression_is_true analog: every row must satisfy ``expr``."""
-    n = df.filter(~F.expr(expr)).count()
-    if n:
-        _fail(name, f"{n} rows violate {expr!r}")
-
-
 def reconcile_counts(left: DataFrame, right: DataFrame, tolerance: int = 0) -> None:
     """Split-integrity reconciliation (reference:
     tests/test_contact_email_splitting_integrity.sql — recompute independently
@@ -67,23 +31,6 @@ def reconcile_counts(left: DataFrame, right: DataFrame, tolerance: int = 0) -> N
     nl, nr = left.count(), right.count()
     if abs(nl - nr) > tolerance:
         _fail("reconcile_counts", f"left={nl} right={nr} tolerance={tolerance}")
-
-
-def assert_accepted_range(
-    df: DataFrame, col: str, lo=None, hi=None, inclusive: bool = True
-) -> None:
-    """dbt_utils.accepted_range analog (reference: models/mart/mart.yml
-    accepted_range tests). NULLs count as violations (dbt pairs the test
-    with not_null; here one check suffices)."""
-    c = F.col(col)
-    ok = F.lit(True)
-    if lo is not None:
-        ok = ok & ((c >= lo) if inclusive else (c > lo))
-    if hi is not None:
-        ok = ok & ((c <= hi) if inclusive else (c < hi))
-    n = df.filter(~ok | c.isNull()).count()
-    if n:
-        _fail("accepted_range", f"{n} rows of {col} outside [{lo}, {hi}]")
 
 
 def assert_fresh(df: DataFrame, ts_col: str, max_age_hours: float, now) -> None:
@@ -140,6 +87,8 @@ def _violation_expr(check: dict):
         c = F.col(check["col"])
         return F.count(F.when(~c.isin(check["values"]) | c.isNull(), 1))
     if kind == "accepted_range":
+        # dbt_utils.accepted_range, inclusive bounds. NULLs count as
+        # violations (dbt pairs the test with not_null; here one suffices).
         c = F.col(check["col"])
         ok = F.lit(True)
         if check.get("lo") is not None:
@@ -147,7 +96,7 @@ def _violation_expr(check: dict):
         if check.get("hi") is not None:
             ok = ok & (c <= check["hi"])
         return F.count(F.when(~ok | c.isNull(), 1))
-    if kind == "expression":
+    if kind == "expression":  # dbt_utils.expression_is_true
         return F.count(F.when(~F.expr(check["expr"]), 1))
     raise ValueError(f"unknown check kind {kind!r}")
 
@@ -189,7 +138,7 @@ def run_suite(df: DataFrame, checks: list[dict]) -> DataFrame:
     Returns (check_name, n_violations, passed) — one row per check, computed
     from one scan of ``df``. `unique` checks use COUNT DISTINCT, which
     Catalyst plans as an expand; suites mixing several multi-column unique
-    keys on huge tables may prefer per-key `assert_unique` instead.
+    keys on huge tables may prefer one suite per key instead.
     """
     aggs = [
         _violation_expr(c).cast("bigint").alias(f"_chk{i}")
@@ -203,3 +152,15 @@ def run_suite(df: DataFrame, checks: list[dict]) -> DataFrame:
     return wide.select(
         F.expr(f"stack({len(checks)}, {stack_args}) AS (check_name, n_violations)")
     ).withColumn("passed", F.col("n_violations") == 0)
+
+
+def assert_suite(df: DataFrame, checks: list[dict]) -> None:
+    """Evaluate ``checks`` with :func:`run_suite` and raise ``QualityError``
+    naming each failed check and its violation count."""
+    failed = [
+        f"{r['check_name']} ({r['n_violations']} violations)"
+        for r in run_suite(df, checks).collect()
+        if not r["passed"]
+    ]
+    if failed:
+        _fail("suite", "; ".join(failed))

@@ -26,8 +26,6 @@ and incremental join-view maintenance.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from importer_spark.io import Tables
@@ -102,10 +100,9 @@ def order_volume_trend_ols(spark, sf_dir):
 
 
 # K (cell count) is THE SemDeDup scale dial — in-cell work is O(N²/K), so K
-# must grow ∝ corpus (DEPLOY.md "SemDeDup sizing"). Env-tunable so the scaled
-# gates certify the same query at K∝N (the oracle string below regenerates
-# from the same value at import time, keeping parity by construction).
-_N_SEEDS = int(os.environ.get("SPARK_GRAFT_SEMDEDUP_SEEDS", "8"))
+# must grow ∝ corpus (DEPLOY.md "SemDeDup sizing"). The catalog query fixes
+# K; callers at other scales pass operators.semdedup.semantic_dedup(n_seeds=).
+SEMDEDUP_SEEDS = 8
 _SEM_TAU = 0.45  # below this corpus's max pairwise cosine — dups exist
 
 # ROUND(…, 9) before the argmax on BOTH engines: near-tie FP noise below the
@@ -113,7 +110,7 @@ _SEM_TAU = 0.45  # below this corpus's max pairwise cosine — dups exist
 # ROUND_SCALE is the same constant).
 _SEMDEDUP_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-seeds AS (SELECT vec_id AS seed_id, emb AS semb FROM e WHERE vec_id < {_N_SEEDS}),
+seeds AS (SELECT vec_id AS seed_id, emb AS semb FROM e WHERE vec_id < {SEMDEDUP_SEEDS}),
 assign AS (
   SELECT vec_id, emb, seed_id,
     ROW_NUMBER() OVER (
@@ -140,16 +137,16 @@ def semantic_dedup_cells(spark, sf_dir):
     lower-id cosine-≥-τ flags from ONE applyInPandas per cell — the pair
     stage shuffles on the cell key only, which is the entire point of
     semantic pre-partitioning. The oracle keeps the naive correlated-EXISTS
-    form, so parity certifies the bucketed rewrite. K comes from
-    SPARK_GRAFT_SEMDEDUP_SEEDS (scaled gates run K∝N; seeds here are
-    vec_id < K ≡ the K lowest ids — this corpus's ids are dense from 0)."""
+    form, so parity certifies the bucketed rewrite. K is ``SEMDEDUP_SEEDS``
+    (seeds here are vec_id < K ≡ the K lowest ids — this corpus's ids are
+    dense from 0)."""
     from importer_spark.operators.semdedup import semantic_dedup
 
     t = Tables(spark, sf_dir)
     e = t.wide("embeddings").select(
         "vec_id", as_double_array(F.col("embedding")).alias("emb")
     )
-    return semantic_dedup(e, "vec_id", "emb", n_seeds=_N_SEEDS, tau=_SEM_TAU)
+    return semantic_dedup(e, "vec_id", "emb", n_seeds=SEMDEDUP_SEEDS, tau=_SEM_TAU)
 
 
 _TRI_SQL = """

@@ -4,8 +4,6 @@ operators: language-ID, quality scoring, token counting, fingerprinting).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from importer_spark.io import Tables
@@ -333,51 +331,21 @@ WHERE bit_count(CAST(xor(ha, hb) AS BIGINT)) <= {_SIMHASH_HAM_K}
 """
 
 
-# Production dial values (r9 verdict #1): the bucket cap + SNM window are
-# read at IMPORT time (the margin-planes convention in llm_similarity) so
-# the Spark plan and the oracle SQL baked at registration can never
-# disagree about the dial — a per-call env read could desync the two
-# engines between registration and execution.
-_SH_CAP = int(os.environ.get("SPARK_GRAFT_SIMHASH_BUCKET_CAP", "64"))
-_SH_SNM = int(os.environ.get("SPARK_GRAFT_SIMHASH_SNM_WINDOW", "8"))
-if _SH_CAP < 1:
-    raise ValueError(f"SPARK_GRAFT_SIMHASH_BUCKET_CAP must be >= 1, got {_SH_CAP}")
-if _SH_SNM != 0 and _SH_SNM < 2:
-    raise ValueError(
-        f"SPARK_GRAFT_SIMHASH_SNM_WINDOW must be 0 (disable) or >= 2, got {_SH_SNM}"
-    )
+# Production bucket cap and sorted-neighborhood window: module constants,
+# so the Spark plan and the oracle SQL baked at registration share one value.
+SIMHASH_BUCKET_CAP = 64
+SIMHASH_SNM_WINDOW = 8
 
 
-def _simhash_capped_sql() -> str:
-    """DuckDB oracle for the capped+SNM production config: the same banded
-    plan as `_SIMHASH_PAIRS_SQL` restricted to within-cap buckets, plus a
-    sorted-neighborhood chain over the routed-out buckets (row_number
-    self-join on rn+1..rn+window-1). The chained pair set depends only on
-    the (simhash, doc_id) TOTAL order inside each bucket — no engine tie
-    ambiguity — so DuckDB re-derives it independently of Spark's
-    lead()-struct formulation (operators.dedup.snm_chain_pairs).
-    Orientation matches snm_chain_pairs: id_a = min(doc_id)."""
-    snm_cand = ""
-    union = ""
-    if _SH_SNM >= 2:
-        snm_cand = f""",
-snm_rows AS (
-  SELECT band, band_val, doc_id, simhash,
-         ROW_NUMBER() OVER (PARTITION BY band, band_val
-                            ORDER BY simhash, doc_id) AS rn
-  FROM sized WHERE bucket_size > {_SH_CAP}
-),
-snm_cand AS (
-  SELECT CASE WHEN x.doc_id < y.doc_id THEN x.doc_id ELSE y.doc_id END AS id_a,
-         CASE WHEN x.doc_id < y.doc_id THEN x.simhash ELSE y.simhash END AS ha,
-         CASE WHEN x.doc_id < y.doc_id THEN y.doc_id ELSE x.doc_id END AS id_b,
-         CASE WHEN x.doc_id < y.doc_id THEN y.simhash ELSE x.simhash END AS hb
-  FROM snm_rows x JOIN snm_rows y
-    ON x.band = y.band AND x.band_val = y.band_val
-   AND y.rn > x.rn AND y.rn <= x.rn + {_SH_SNM - 1}
-)"""
-        union = "\n    UNION ALL SELECT id_a, ha, id_b, hb FROM snm_cand"
-    return f"""
+# DuckDB oracle for the capped+SNM production config: the same banded plan
+# as `_SIMHASH_PAIRS_SQL` restricted to within-cap buckets, plus a
+# sorted-neighborhood chain over the routed-out buckets (row_number
+# self-join on rn+1..rn+window-1). The chained pair set depends only on the
+# (simhash, doc_id) TOTAL order inside each bucket — no engine tie
+# ambiguity — so DuckDB re-derives it independently of Spark's lead()-struct
+# formulation (operators.dedup.snm_chain_pairs). Orientation matches
+# snm_chain_pairs: id_a = min(doc_id).
+_SIMHASH_CAPPED_SQL = f"""
 WITH sh AS ({{base}}),
 bands AS (
   SELECT doc_id, simhash, b.band, (simhash >> (8 * b.band)) & 255 AS band_val
@@ -387,12 +355,28 @@ sized AS (
   SELECT *, COUNT(*) OVER (PARTITION BY band, band_val) AS bucket_size
   FROM bands
 ),
-within AS (SELECT * FROM sized WHERE bucket_size <= {_SH_CAP}){snm_cand},
+within AS (SELECT * FROM sized WHERE bucket_size <= {SIMHASH_BUCKET_CAP}),
+snm_rows AS (
+  SELECT band, band_val, doc_id, simhash,
+         ROW_NUMBER() OVER (PARTITION BY band, band_val
+                            ORDER BY simhash, doc_id) AS rn
+  FROM sized WHERE bucket_size > {SIMHASH_BUCKET_CAP}
+),
+snm_cand AS (
+  SELECT CASE WHEN x.doc_id < y.doc_id THEN x.doc_id ELSE y.doc_id END AS id_a,
+         CASE WHEN x.doc_id < y.doc_id THEN x.simhash ELSE y.simhash END AS ha,
+         CASE WHEN x.doc_id < y.doc_id THEN y.doc_id ELSE x.doc_id END AS id_b,
+         CASE WHEN x.doc_id < y.doc_id THEN y.simhash ELSE x.simhash END AS hb
+  FROM snm_rows x JOIN snm_rows y
+    ON x.band = y.band AND x.band_val = y.band_val
+   AND y.rn > x.rn AND y.rn <= x.rn + {SIMHASH_SNM_WINDOW - 1}
+),
 cand AS (
   SELECT DISTINCT id_a, ha, id_b, hb FROM (
     SELECT a.doc_id AS id_a, a.simhash AS ha, c.doc_id AS id_b, c.simhash AS hb
     FROM within a JOIN within c
-      ON a.band = c.band AND a.band_val = c.band_val AND a.doc_id < c.doc_id{union}
+      ON a.band = c.band AND a.band_val = c.band_val AND a.doc_id < c.doc_id
+    UNION ALL SELECT id_a, ha, id_b, hb FROM snm_cand
   )
 )
 SELECT id_a, id_b,
@@ -492,18 +476,18 @@ def simhash_near_dups(spark, sf_dir):
 
 @query(
     "simhash_bucket_capped",
-    oracle=_simhash_capped_sql().format(base=_simhash_sql().strip()),
+    oracle=_SIMHASH_CAPPED_SQL.format(base=_simhash_sql().strip()),
 )
 def simhash_bucket_capped(spark, sf_dir):
     """The PRODUCTION bucket-cap configuration over the same banded SimHash
     probe (r6 verdict #2): the 100× exponent 1.51 was measured as
     candidate-BUCKET growth (clone buckets grow quadratically in members),
     so a duplicate-heavy shard pays unbounded candidate verification. With
-    the cap (SPARK_GRAFT_SIMHASH_BUCKET_CAP, import-read, default 64) any
+    the cap (``SIMHASH_BUCKET_CAP`` = 64) any
     (band, band_val) bucket holding more docs is routed to the overflow
     relation instead of the self-join — candidate work bounded by cap²/2
     per bucket — and the sorted-neighborhood recovery pass
-    (SPARK_GRAFT_SIMHASH_SNM_WINDOW, import-read, default 8; 0 disables)
+    (``SIMHASH_SNM_WINDOW`` = 8)
     re-mines the routed-out buckets at O(bucket×window), closing most of
     the recall hole bucket-drop opened (RECALL_CURVE.json: doc-flag recall
     0.988 at cap 64 vs 0.258 bucket-drop on Zipf clone data; clones sort
@@ -518,7 +502,7 @@ def simhash_bucket_capped(spark, sf_dir):
     candidates pass the same Hamming verify); tests/test_emit_caps.py pins
     subset + overflow-accounting + recovery semantics."""
     pairs, _overflow = _simhash_pairs(
-        spark, sf_dir, bucket_cap=_SH_CAP, snm_window=_SH_SNM
+        spark, sf_dir, bucket_cap=SIMHASH_BUCKET_CAP, snm_window=SIMHASH_SNM_WINDOW
     )
     return pairs
 

@@ -355,8 +355,8 @@ def tpch_q12_shipmode_priority(spark, sf_dir):
     the join only sees one year of lines."""
     t = Tables(spark, sf_dir)
     _register_tpch_views(t)
-    # Parameterized wide lineitem (the tpch_q1 pattern): the shipmode/date
-    # filters push into the scan and orders broadcasts, so the join probe +
+    # Parameterized wide lineitem (the tpch_q1 pattern): the ship-date
+    # filter pushes into the scan and orders broadcasts, so the join probe +
     # CASE aggregation run in the single-split scan stage (r11 interleaved
     # A/B: 0.79 -> 0.64 s; the rest of the join family measured 1.2-1.8x
     # WORSE under the same widening and stays plain).

@@ -3,8 +3,8 @@
 The reference pulls Shopify products/orders/customers with an ``updated_at``
 cursor, ascending order, 250/page (shopify_dlt/__init__.py:67-165,
 helpers.py:21-82). The Spark-shaped equivalent: a driver-side paginated
-fetcher feeding ``spark.createDataFrame`` batches, with the cursor persisted
-via ``streaming.cursor_incremental_batch``'s state table. No live HTTP in
+fetcher feeding ``spark.createDataFrame`` batches; the caller persists the
+cursor with ``streaming.commit_cursor`` after a durable write. No live HTTP in
 this environment — the transport is injected, and tests drive it with a fake.
 """
 
@@ -69,5 +69,5 @@ class RestCursorSource:
             return self.spark.createDataFrame([], schema=schema)
         df = self.spark.createDataFrame(records)
         # New cursor = max(cursor_field); caller persists it (see
-        # streaming.cursor_incremental_batch for the state-table pattern).
+        # plans/pipeline.py::run_source_load for the state-table pattern).
         return df.withColumn("_cursor", F.col(self.cursor_field).cast("string"))

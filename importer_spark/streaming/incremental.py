@@ -1,10 +1,11 @@
 """Streaming / incremental processing (SURVEY §2.9).
 
 The reference is batch-only; its incremental machinery maps to:
-  I1 cursor-based extract  → ``cursor_incremental_batch`` (batch + watermark
-     table) or ``stream_events`` (Structured Streaming file source, whose
-     checkpoint gives exactly-once the reference hand-rolls via a JSON ledger
-     — orchestrator.py:34-141).
+  I1 cursor-based extract  → ``cursor_incremental_batch`` (rows past the
+     watermark table's cursor; the caller advances it with ``commit_cursor``
+     after a durable write) or ``stream_events`` (Structured Streaming file
+     source, whose checkpoint gives exactly-once the reference hand-rolls
+     via a JSON ledger — orchestrator.py:34-141).
   I2 snapshot append       → io.snapshot_append.
   I3 merge upsert          → io.merge_by_key.
 
@@ -94,26 +95,17 @@ def cursor_incremental_batch(
     source: DataFrame,
     cursor_col: str,
     state_path: str,
-    auto_commit: bool = True,
 ) -> DataFrame:
     """Cursor-based incremental extract (reference I1: dlt's ``updated_at``
     high-watermark, shopify_dlt/__init__.py:69-77): rows strictly past the
     persisted cursor. State is a 1-row parquet — on a real deployment, a
     table in the catalog.
 
-    With ``auto_commit`` the watermark advances immediately — at-most-once
-    if the caller's downstream write then fails. For at-least-once, pass
-    ``auto_commit=False``, consume the delta durably, then call
-    ``commit_cursor(spark, state_path, delta_max)`` yourself (see
-    plans/pipeline.py::run_source_load). An empty source never regresses the
-    watermark."""
+    This only filters. The caller consumes the delta durably, then advances
+    the watermark with ``commit_cursor`` (at-least-once; see
+    plans/pipeline.py::run_source_load)."""
     prev = read_cursor(spark, state_path)
-    delta = source if prev is None else source.filter(F.col(cursor_col) > F.lit(prev))
-    if auto_commit:
-        new_max = source.agg(F.max(cursor_col).alias("cursor")).first()["cursor"]
-        if cursor_advanced(new_max, prev):
-            commit_cursor(spark, state_path, new_max)
-    return delta
+    return source if prev is None else source.filter(F.col(cursor_col) > F.lit(prev))
 
 
 def stream_dedup_within_watermark(

@@ -41,17 +41,6 @@ def last_committed_batch_id(table: TxnTable, query_id: str) -> int | None:
     return None
 
 
-def committed_batch_ids(table: TxnTable, query_id: str) -> set[int]:
-    """Full-history form (every batchId this query ever committed) — kept
-    for audits/tests; the streaming guards use last_committed_batch_id."""
-    out = set()
-    for v in table._versions():
-        txn = table._manifest(v).get("txn")
-        if txn and txn.get("query_id") == query_id:
-            out.add(int(txn["batch_id"]))
-    return out
-
-
 def _make_guarded(table: TxnTable, query_id: str, commit_one):
     """Shared exactly-once wrapper: skip batchIds at or below the cached
     high-water mark; refresh the cache from the log only when unset (fresh

@@ -13,12 +13,10 @@ from importer_spark.operators.multimodal import decode_media, to_media_table
 from importer_spark.operators.similarity import cosine_topk, as_double_array
 from importer_spark.quality import (
     QualityError,
-    assert_accepted_values,
-    assert_expression,
-    assert_not_null,
-    assert_unique,
+    assert_suite,
 )
 from importer_spark.streaming.incremental import (
+    commit_cursor,
     cursor_incremental_batch,
     stream_events,
     windowed_event_counts,
@@ -66,6 +64,9 @@ def test_cursor_incremental_batch(spark, tmp_path):
     src = spark.createDataFrame([Row(id=1, updated_at="2024-01-01"), Row(id=2, updated_at="2024-01-02")])
     first = cursor_incremental_batch(spark, src, "updated_at", state)
     assert first.count() == 2
+    # Filtering never moves the watermark; the caller commits after its write.
+    assert cursor_incremental_batch(spark, src, "updated_at", state).count() == 2
+    commit_cursor(spark, state, "2024-01-02")
     src2 = spark.createDataFrame(
         [Row(id=2, updated_at="2024-01-02"), Row(id=3, updated_at="2024-01-03")]
     )
@@ -238,14 +239,18 @@ def test_quality_assertions(spark):
     df = spark.createDataFrame(
         [Row(id=1, status="A"), Row(id=2, status="B"), Row(id=2, status="Z")]
     )
-    assert_not_null(df, ["id", "status"])
-    with pytest.raises(QualityError):
-        assert_unique(df, ["id"])
-    with pytest.raises(QualityError):
-        assert_accepted_values(df, "status", ["A", "B"])
-    assert_expression(df, "id > 0")
-    with pytest.raises(QualityError):
-        assert_expression(df, "id > 1")
+    assert_suite(df, [
+        {"name": "id_not_null", "kind": "not_null", "col": "id"},
+        {"name": "status_not_null", "kind": "not_null", "col": "status"},
+    ])
+    with pytest.raises(QualityError, match=r"id_unique \(1 violations\)"):
+        assert_suite(df, [{"name": "id_unique", "kind": "unique", "col": "id"}])
+    with pytest.raises(QualityError, match=r"status_values \(1 violations\)"):
+        assert_suite(df, [{"name": "status_values", "kind": "accepted_values",
+                           "col": "status", "values": ["A", "B"]}])
+    assert_suite(df, [{"name": "id_pos", "kind": "expression", "expr": "id > 0"}])
+    with pytest.raises(QualityError, match=r"id_gt1 \(1 violations\)"):
+        assert_suite(df, [{"name": "id_gt1", "kind": "expression", "expr": "id > 1"}])
 
 
 def test_catalog_quality_gates(spark):
@@ -253,13 +258,18 @@ def test_catalog_quality_gates(spark):
     from importer_spark.queries import QUERIES
 
     fact = QUERIES["orders_fact"](spark, SF_DIR)
-    assert_unique(fact, ["order_key"])
-    assert_not_null(fact, ["order_key", "cust_key", "order_date", "sales_channel"])
-    assert_accepted_values(
-        fact, "sales_channel", ["Express", "Priority", "Fulfilled-Std", "Standard"]
-    )
-    assert_accepted_values(fact, "order_size", ["small", "medium", "large"])
-    assert_expression(fact, "net_amount <= gross_amount", "net_le_gross")
+    assert_suite(fact, [
+        {"name": "order_key_unique", "kind": "unique", "col": "order_key"},
+        *[{"name": f"{c}_not_null", "kind": "not_null", "col": c}
+          for c in ["order_key", "cust_key", "order_date", "sales_channel"]],
+        {"name": "sales_channel_values", "kind": "accepted_values",
+         "col": "sales_channel",
+         "values": ["Express", "Priority", "Fulfilled-Std", "Standard"]},
+        {"name": "order_size_values", "kind": "accepted_values",
+         "col": "order_size", "values": ["small", "medium", "large"]},
+        {"name": "net_le_gross", "kind": "expression",
+         "expr": "net_amount <= gross_amount"},
+    ])
 
 
 def test_kmeans_monotone_and_deterministic(spark):

@@ -9,9 +9,9 @@ import pytest
 
 from importer_spark.quality import (
     QualityError,
-    assert_accepted_range,
     assert_completeness,
     assert_fresh,
+    assert_suite,
     run_suite,
 )
 
@@ -28,10 +28,15 @@ def people(spark):
     )
 
 
+def _score_range(lo, hi):
+    return [{"name": "score_range", "kind": "accepted_range", "col": "score",
+             "lo": lo, "hi": hi}]
+
+
 def test_accepted_range_catches_out_of_bounds(people):
-    with pytest.raises(QualityError, match="accepted_range"):
-        assert_accepted_range(people, "score", lo=0, hi=100)
-    assert_accepted_range(people, "score", lo=-10, hi=1000)
+    with pytest.raises(QualityError, match=r"score_range \(2 violations\)"):
+        assert_suite(people, _score_range(0, 100))
+    assert_suite(people, _score_range(-10, 1000))
 
 
 def test_freshness(people):

@@ -29,8 +29,6 @@ def test_mb_plane_ladder_matches_sql_case_everywhere():
         _mb_planes_case_sql,
     )
 
-    if os.environ.get("SPARK_GRAFT_MARGIN_PLANES") is not None:
-        pytest.skip("env override pins a fixed plane count")
     case = _mb_planes_case_sql()
     con = duckdb.connect()
     ns = set()

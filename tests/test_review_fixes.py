@@ -41,16 +41,27 @@ def test_read_parquet_if_exists_missing_vs_error(spark, tmp_path):
 def test_cursor_never_regresses_and_empty_batch_keeps_watermark(spark, tmp_path):
     state = str(tmp_path / "cur")
     commit_cursor(spark, state, "2024-05-01")
+
+    def consume(source):
+        # The caller's side of the contract: commit the delta's max after
+        # consuming it (None for an empty delta keeps the watermark).
+        delta = cursor_incremental_batch(spark, source, "updated_at", state)
+        n = delta.count()
+        commit_cursor(spark, state, delta.agg(F.max("updated_at")).first()[0])
+        return n
+
     # Empty source: watermark unchanged, delta empty.
     empty = spark.createDataFrame([], schema="id int, updated_at string")
-    delta = cursor_incremental_batch(spark, empty, "updated_at", state)
-    assert delta.count() == 0
+    assert consume(empty) == 0
     assert read_cursor(spark, state) == "2024-05-01"
     # Source containing only old rows: watermark unchanged.
     old = spark.createDataFrame([Row(id=1, updated_at="2024-01-01")])
-    delta = cursor_incremental_batch(spark, old, "updated_at", state)
-    assert delta.count() == 0
+    assert consume(old) == 0
     assert read_cursor(spark, state) == "2024-05-01"
+    # A newer row advances it.
+    new = spark.createDataFrame([Row(id=2, updated_at="2024-06-01")])
+    assert consume(new) == 1
+    assert read_cursor(spark, state) == "2024-06-01"
 
 
 def test_run_source_load_commits_cursor_after_write(spark, tmp_path):
@@ -467,3 +478,26 @@ def test_lang_cells_never_needs_global_model_lock(spark):
         )
     t.join(timeout=30)
     assert sum(r.n for r in out["cells"]) > 0
+
+
+def test_widen_skips_inputs_already_as_wide_as_the_repartition(spark, tmp_path, monkeypatch):
+    """An input whose estimated splits fall in [target/2, target) already
+    reaches the repartition width: it must come back unchanged, not pay a
+    shuffle that narrows it. A one-split input is still widened."""
+    import importer_spark.io as io
+
+    path = str(tmp_path / "t")
+    spark.range(100).write.parquet(path)
+    df = spark.read.parquet(path)
+    size = sum(f.stat().st_size for f in (tmp_path / "t").rglob("*") if f.is_file())
+    target = spark.sparkContext.defaultParallelism
+    width = max(2, target // 2)
+
+    monkeypatch.setattr(io, "_WIDEN_SPLIT_BYTES", size // width)
+    assert width <= size // io._WIDEN_SPLIT_BYTES < target
+    assert io.widen_narrow_scan(df, path) is df
+
+    monkeypatch.setattr(io, "_WIDEN_SPLIT_BYTES", size + 1)
+    widened = io.widen_narrow_scan(df, path)
+    assert widened is not df
+    assert widened.rdd.getNumPartitions() == width

@@ -80,12 +80,12 @@ heavy_lane() {
   python tools/run_local_gate.py /tmp/sf1 LOCAL_GATE_sf1.json \
     > "$LOGDIR/local_sf1.log" 2>&1
   say "heavy: SKEW sf1 (oracle budget 900s; as-of PIT oracle form)"
-  # SPARK_GRAFT_PIT_ORACLE=asof: the definitional interval-join oracle is
+  # --pit-oracle asof: the definitional interval-join oracle is
   # quadratic on the hot part key (r8: 22 GiB DuckDB spill, then death);
   # every other axis keeps the independent interval form.
-  SPARK_GRAFT_ORACLE_TIMEOUT=900 SPARK_GRAFT_PIT_ORACLE=asof \
-    python tools/run_local_gate.py /tmp/skew1 \
-    SKEW_GATE.json > "$LOGDIR/skew.log" 2>&1
+  SPARK_GRAFT_ORACLE_TIMEOUT=900 \
+    python tools/run_local_gate.py /tmp/skew1 SKEW_GATE.json \
+    --pit-oracle asof > "$LOGDIR/skew.log" 2>&1
   say "heavy: AQE skew-split evidence merge"
   python tools/measure_skew_join.py /tmp/skew1 SKEW_GATE.json \
     > "$LOGDIR/skew_aqe.log" 2>&1

@@ -24,7 +24,14 @@ the Spark side's rows + seconds, which DID complete) — distinct from
 "fails", because it is evidence about the oracle's cost, not the engine's
 correctness; those queries stay value-certified at the driver scales.
 
+``--pit-oracle asof`` swaps point_in_time_price's oracle for the
+union-and-window as-of form (queries/pricing.py ``_PIT_SQL_ASOF``) for this
+run only: the registered definitional interval join is quadratic on a hot
+part key, so the skew gate runs the as-of twin; the two forms are proven
+identical by tests/test_pit_oracle_crosscheck.py.
+
 Usage: python tools/run_local_gate.py [sf_dir] [out_json] [--cpus N]
+       [--pit-oracle interval|asof]
 """
 
 from __future__ import annotations
@@ -110,6 +117,13 @@ def main() -> None:
         i = argv.index("--only")
         only = set(argv[i + 1].split(","))
         del argv[i : i + 2]
+    pit_oracle = "interval"
+    if "--pit-oracle" in argv:
+        i = argv.index("--pit-oracle")
+        pit_oracle = argv[i + 1]
+        if pit_oracle not in ("interval", "asof"):
+            raise SystemExit(f"--pit-oracle must be interval|asof, got {pit_oracle!r}")
+        del argv[i : i + 2]
     # --boundary name=[kind~[regex~]]reason (repeatable): a DOCUMENTED
     # engine-semantics boundary — the named query still runs on BOTH
     # engines and a match still counts as a pass, but a COMPARISON
@@ -181,6 +195,11 @@ def main() -> None:
     from importer_spark.queries import ORACLES, QUERIES
     from importer_spark.session import get_spark
     from tests.conftest import canonical, duck_con
+
+    if pit_oracle == "asof":
+        from importer_spark.queries.pricing import _PIT_SQL_ASOF
+
+        ORACLES["point_in_time_price"] = _PIT_SQL_ASOF
 
     spark = get_spark(
         app_name="local-gate",
@@ -345,6 +364,7 @@ def main() -> None:
     artifact = {
         "cert": cert_stamp(),
         "sf_dir": sf_dir,
+        "pit_oracle": pit_oracle,
         "n": len(seconds),
         "passes": len(seconds) - len(fails) - len(oracle_timeouts)
         - len(boundaries_hit),

@@ -78,10 +78,10 @@ SWEEP_QUERIES = [
     "segment_dedup_removal",
     "segment_dedup_removal_incremental",
     "embedding_near_dups_incremental",
-    # r7 emit-cap dials: the bounded-degradation twins of the two
-    # output/candidate-driven probes above (SPARK_GRAFT_PROBE_EMIT_CAP read
-    # per call; SPARK_GRAFT_SIMHASH_BUCKET_CAP/_SNM_WINDOW import-read
-    # since r10, when the capped config gained its own oracle).
+    # r7 emit caps: the bounded-degradation twins of the two
+    # output/candidate-driven probes above (module constants
+    # structs.PROBE_EMIT_CAP and llm_text.SIMHASH_BUCKET_CAP /
+    # SIMHASH_SNM_WINDOW).
     "embedding_probe_emit_capped",
     "simhash_bucket_capped",
 ]
