@@ -16,14 +16,14 @@ Commands:
 
 Options: --sf-dir (default /root/testdata/sf0.001), --limit N (default 20,
 0 = no limit), --master (default local[*]); pipeline adds --warehouse DIR
-(required), --mode seed|incremental|auto (default auto: seed when the
-warehouse is empty), --skip-quality.
+(required), --mode seed|incremental|auto (default auto: a source seeds
+until its first cursor commit), --skip-quality.
 
 The reference's surface is an orchestrator CLI (orchestrator.py:580-629:
 sources in priority order, seed/incremental modes, then dbt build + test);
 `pipeline` is that loop composed from this library: run_source_load per
 source, ModelGraph topological build, write marts, quality_manifest suites
-on the BUILT frames. Exit code 1 = a quality gate failed (the dbt-test
+on the WRITTEN marts. Exit code 1 = a quality gate failed (the dbt-test
 contract); the programmatic API remains importer_spark.queries.QUERIES.
 """
 
@@ -128,10 +128,7 @@ def _pipeline(args, out) -> int:
     loads = {}
     for name, (df, keys, cursor) in sources.items():
         target = os.path.join(args.warehouse, "sources", name)
-        mode = args.mode
-        if mode == "auto":
-            mode = "incremental" if os.path.exists(target) else "seed"
-        res = run_source_load(spark, df, target, keys=keys, cursor_col=cursor, mode=mode)
+        res = run_source_load(spark, df, target, keys=keys, cursor_col=cursor, mode=args.mode)
         loads[name] = {"mode": res.mode, "rows_loaded": res.rows_loaded,
                        "target_rows": res.target_rows}
         print(json.dumps({"stage": "source_load", "source": name, **loads[name]}),
@@ -140,17 +137,19 @@ def _pipeline(args, out) -> int:
     # --- stage 2: model DAG build + mart materialization ------------------
     outputs = GRAPH.run(spark, args.sf_dir)
     marts = {}
+    built = {}
     try:
         for name, df in outputs.items():
             if not name.startswith("mart_"):
                 continue  # staging/intermediate stay lazy (dbt view layers)
             path = os.path.join(args.warehouse, "marts", name)
             write_replace(df, path)
-            marts[name] = spark.read.parquet(path).count()
+            built[name] = spark.read.parquet(path)
+            marts[name] = built[name].count()
             print(json.dumps({"stage": "mart", "model": name, "rows": marts[name],
                               "path": path}), file=out)
 
-        # --- stage 3: quality suites on the BUILT frames ------------------
+        # --- stage 3: quality suites on the WRITTEN marts -----------------
         failed = []
         checked = 0
         if not args.skip_quality:
@@ -160,7 +159,7 @@ def _pipeline(args, out) -> int:
                 checks = MANIFEST.get(name)
                 if not checks:
                     continue
-                res = run_suite(outputs[name], checks).collect()
+                res = run_suite(built[name], checks).collect()
                 checked += len(res)
                 bad = [(r.check_name, r.n_violations) for r in res if not r.passed]
                 failed.extend((name, c, n) for c, n in bad)

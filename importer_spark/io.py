@@ -4,6 +4,13 @@ Covers the reference's table semantics (SURVEY §1.4): merge/upsert by primary
 key, full replace, append, and incremental snapshot-append — implemented on
 plain parquet (Delta/Iceberg would make merge transactional; the dedup-by-key
 rewrite below is the storage-agnostic equivalent).
+
+A merge table has one layout from its first write on: parquet partitioned
+by the key bucket ``_kb``, plus a ``_merge_meta.json`` sidecar (bucket
+count and keys) replaced atomically beside the data. ``merge_by_key``
+creates it for a new table, and a seed load (plans/pipeline.py) replaces a
+table with it, so every later incremental merge rewrites only the buckets
+its batch touches.
 """
 
 from __future__ import annotations
@@ -11,10 +18,13 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from importer_spark.txn import write_json_atomic
 
 
 def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
@@ -362,35 +372,55 @@ BUCKET_COL = "_kb"
 _MERGE_META = "_merge_meta.json"
 
 
-def _hadoop_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, p, jvm
+def _bucket_file_counts(path: str) -> dict[int, int]:
+    """Parquet files per ``_kb`` partition of a merge table."""
+    return {
+        int(d.split("=", 1)[1]): sum(
+            f.endswith(".parquet") for f in os.listdir(os.path.join(path, d))
+        )
+        for d in os.listdir(path)
+        if d.startswith(f"{BUCKET_COL}=")
+    }
 
 
-def _read_merge_meta(spark: SparkSession, path: str) -> dict | None:
-    fs, p, jvm = _hadoop_path(spark, f"{path}/{_MERGE_META}")
-    if not fs.exists(p):
+def _read_merge_meta(path: str) -> dict | None:
+    try:
+        with open(os.path.join(path, _MERGE_META)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
         return None
-    stream = fs.open(p)
-    try:
-        return json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
-    finally:
-        stream.close()
-
-
-def _write_merge_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    fs, p, _ = _hadoop_path(spark, f"{path}/{_MERGE_META}")
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(meta, sort_keys=True).encode()))
-    finally:
-        out.close()
 
 
 def _bucket_expr(keys: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
+
+
+def _keyed(source: DataFrame, bucket_keys: list[str], n_buckets: int) -> DataFrame:
+    """Source rows with their bucket, ranked ahead of target rows on ties."""
+    return source.withColumn(
+        BUCKET_COL, _bucket_expr(bucket_keys, n_buckets)
+    ).withColumn("_merge_rank", F.lit(1))
+
+
+def _write_merge_layout(
+    source: DataFrame,
+    path: str,
+    keys: list[str],
+    version_col: str | None = None,
+    n_buckets: int = 64,
+    bucket_keys: list[str] | None = None,
+) -> None:
+    """Replace ``path`` with ``source`` (one row per key) in the merge
+    layout: data partitioned by ``_kb``, then ``_merge_meta.json`` written
+    atomically. How ``merge_by_key`` creates a table and how a seed load
+    replaces one."""
+    bucket_keys = list(bucket_keys or keys)
+    result = _resolve_winners(_keyed(source, bucket_keys, n_buckets), keys, version_col)
+    result.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
+    write_json_atomic(
+        os.path.join(path, _MERGE_META),
+        {"n_buckets": n_buckets, "keys": list(keys), "bucket_keys": bucket_keys},
+    )
 
 
 def merge_by_key(
@@ -433,9 +463,8 @@ def merge_by_key(
 
     ``n_buckets`` is fixed at table creation (persisted in a ``_merge_meta``
     sidecar the parquet reader ignores); later calls use the stored value.
-    A legacy unpartitioned target is migrated in place once via staged
-    rename (old dir is renamed aside before the new one moves in, so every
-    crash window leaves a recoverable directory)."""
+    A target that exists without that sidecar was not written in this
+    layout and is rejected."""
     if bucket_keys is None:
         bucket_keys = list(keys)
     if list(keys)[: len(bucket_keys)] != list(bucket_keys):
@@ -443,67 +472,34 @@ def merge_by_key(
             f"merge_by_key: bucket_keys={bucket_keys} must be a prefix of "
             f"keys={list(keys)} (equal PKs must share a bucket)"
         )
-    target = read_parquet_if_exists(spark, path)
-    meta = _read_merge_meta(spark, path) if target is not None else None
-    if meta is not None:
-        if list(meta.get("keys", keys)) != list(keys) or list(
-            meta.get("bucket_keys", meta.get("keys", keys))
-        ) != list(bucket_keys):
-            # The physical layout hashes the ORIGINAL bucket keys; merging
-            # with a different key set would bucket source rows away from
-            # their existing counterparts and silently leave duplicate PKs.
+    meta = _read_merge_meta(path)
+    if meta is None:
+        if os.path.exists(path):
             raise ValueError(
-                f"merge_by_key: table at {path} was created with keys="
-                f"{meta['keys']} bucket_keys="
-                f"{meta.get('bucket_keys', meta.get('keys'))}, got "
-                f"keys={list(keys)} bucket_keys={list(bucket_keys)} — "
-                "rebuild the table to change its merge key"
+                f"merge_by_key: {path} has no {_MERGE_META}, so it is not in "
+                "the bucketed merge layout — re-seed it"
             )
-        n_buckets = int(meta["n_buckets"])
-    src = source.withColumn(
-        BUCKET_COL, _bucket_expr(bucket_keys, n_buckets)
-    ).withColumn("_merge_rank", F.lit(1))
-
-    if target is not None and meta is None:
-        # One-time migration of a pre-bucketing table: full rewrite into the
-        # partitioned layout (unavoidable once), staged + rename-aside swap.
-        tgt = target.withColumn(
-            BUCKET_COL, _bucket_expr(bucket_keys, n_buckets)
-        ).withColumn("_merge_rank", F.lit(2))
-        result = _resolve_winners(src.unionByName(tgt, allowMissingColumns=True), keys, version_col)
-        staging = f"{path}__staging"
-        result.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
-        fs, p, jvm = _hadoop_path(spark, path)
-        hpath = jvm.org.apache.hadoop.fs.Path
-        old = hpath(f"{path}__old")
-        fs.delete(old, True)
-        if not fs.rename(p, old):
-            raise IOError(f"merge_by_key: failed to move {path} aside")
-        if not fs.rename(hpath(staging), p):
-            fs.rename(old, p)  # roll back; staging retains the new data
-            raise IOError(f"merge_by_key: failed to swap staging dir into {path}")
-        fs.delete(old, True)
-        _write_merge_meta(
-            spark, path,
-            {"n_buckets": n_buckets, "keys": keys, "bucket_keys": bucket_keys},
-        )
+        _write_merge_layout(source, path, keys, version_col, n_buckets, bucket_keys)
         return
-
-    if target is None:
-        result = _resolve_winners(src, keys, version_col)
-        result.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-        _write_merge_meta(
-            spark, path,
-            {"n_buckets": n_buckets, "keys": keys, "bucket_keys": bucket_keys},
+    meta.setdefault("bucket_keys", meta["keys"])  # sidecars written before bucket_keys
+    if list(meta["keys"]) != list(keys) or list(meta["bucket_keys"]) != list(bucket_keys):
+        # The physical layout hashes the ORIGINAL bucket keys; merging
+        # with a different key set would bucket source rows away from
+        # their existing counterparts and silently leave duplicate PKs.
+        raise ValueError(
+            f"merge_by_key: table at {path} was created with keys="
+            f"{meta['keys']} bucket_keys={meta['bucket_keys']}, got "
+            f"keys={list(keys)} bucket_keys={list(bucket_keys)} — "
+            "rebuild the table to change its merge key"
         )
-        return
-
+    n_buckets = int(meta["n_buckets"])
+    src = _keyed(source, bucket_keys, n_buckets)
     affected = sorted(
         r[0] for r in src.select(BUCKET_COL).distinct().collect()
     )
     if not affected:  # empty source batch: nothing to merge
         return
-    pruned = target.filter(F.col(BUCKET_COL).isin(affected)).withColumn(
+    pruned = spark.read.parquet(path).filter(F.col(BUCKET_COL).isin(affected)).withColumn(
         "_merge_rank", F.lit(2)
     )
     result = _resolve_winners(src.unionByName(pruned, allowMissingColumns=True), keys, version_col)
@@ -512,20 +508,10 @@ def merge_by_key(
     # only partitions present in the staged data are replaced.
     staging = f"{path}__staging"
     result.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, None)
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        spark.read.parquet(staging).write.mode("overwrite").partitionBy(
-            BUCKET_COL
-        ).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(mode_key)
-        else:
-            spark.conf.set(mode_key, prev)
-    fs, _, jvm = _hadoop_path(spark, path)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    spark.read.parquet(staging).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(BUCKET_COL).parquet(path)
+    shutil.rmtree(staging)
 
 
 def compact_merged_table(
@@ -545,18 +531,7 @@ def compact_merged_table(
     task per compacted bucket → one output file (``max_records_per_file``
     re-splits genuinely oversized buckets). Returns
     {bucket: (files_before, files_after)} for the compacted partitions."""
-    fs, root, jvm = _hadoop_path(spark, path)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    stats: dict[int, int] = {}
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(f"{BUCKET_COL}="):
-            n_files = sum(
-                1
-                for f in fs.listStatus(st.getPath())
-                if f.getPath().getName().endswith(".parquet")
-            )
-            stats[int(name.split("=", 1)[1])] = n_files
+    stats = _bucket_file_counts(path)
     affected = sorted(b for b, n in stats.items() if n > max_files_per_partition)
     if not affected:
         return {}
@@ -566,38 +541,22 @@ def compact_merged_table(
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.partitionBy(BUCKET_COL).parquet(staging)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, None)
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        # repartition again on commit: without it the staging read re-splits
-        # any bucket larger than files.maxPartitionBytes across tasks,
-        # breaking the one-file-per-bucket contract (and every later call
-        # would re-compact that bucket forever)
-        out = (
-            spark.read.parquet(staging)
-            .repartition(len(affected), F.col(BUCKET_COL))
-            .write.mode("overwrite")
-        )
-        if max_records_per_file:
-            out = out.option("maxRecordsPerFile", max_records_per_file)
-        out.partitionBy(BUCKET_COL).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(mode_key)
-        else:
-            spark.conf.set(mode_key, prev)
-    fs.delete(hpath(staging), True)
-    result = {}
-    for b in affected:
-        part = hpath(f"{path}/{BUCKET_COL}={b}")
-        n_after = sum(
-            1
-            for f in fs.listStatus(part)
-            if f.getPath().getName().endswith(".parquet")
-        )
-        result[b] = (stats[b], n_after)
-    return result
+    # repartition again on commit: without it the staging read re-splits
+    # any bucket larger than files.maxPartitionBytes across tasks, breaking
+    # the one-file-per-bucket contract (and every later call would
+    # re-compact that bucket forever)
+    out = (
+        spark.read.parquet(staging)
+        .repartition(len(affected), F.col(BUCKET_COL))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+    )
+    if max_records_per_file:
+        out = out.option("maxRecordsPerFile", max_records_per_file)
+    out.partitionBy(BUCKET_COL).parquet(path)
+    shutil.rmtree(staging)
+    after = _bucket_file_counts(path)
+    return {b: (stats[b], after[b]) for b in affected}
 
 
 def _resolve_winners(merged: DataFrame, keys: list[str], version_col: str | None) -> DataFrame:

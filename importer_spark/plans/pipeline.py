@@ -4,7 +4,8 @@ The reference's orchestrator runs sources in priority order with
 --seed / --incremental / full modes (orchestrator.py:580-629) and tracks
 processed files in a JSON ledger. Here: one driver function composing the
 library — discovery → (seed ? full load : cursor delta) → merge-by-key →
-DAG rebuild → quality gates. State lives in parquet next to the warehouse.
+DAG rebuild → quality gates. The cursor lives in a JSON file next to each
+source table.
 """
 
 from __future__ import annotations
@@ -14,13 +15,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from importer_spark.io import merge_by_key
-from importer_spark.streaming.incremental import (
-    commit_cursor,
-    cursor_advanced,
-    cursor_incremental_batch,
-    read_cursor,
-)
+from importer_spark.io import _write_merge_layout, merge_by_key
+from importer_spark.streaming.incremental import commit_cursor, read_cursor
 
 
 @dataclass
@@ -40,28 +36,31 @@ def run_source_load(
 ) -> LoadResult:
     """Load one source table with seed/incremental semantics.
 
-    seed: full reload, cursor advanced to the batch max;
-    incremental: only rows past the persisted cursor, merged by PK so
-    re-delivered rows upsert (reference I3 late-data handling). The cursor
-    commits AFTER the warehouse write succeeds (at-least-once: a failed run
-    re-delivers, and the PK merge absorbs the duplicates).
+    seed: full reload into the merge layout (io._write_merge_layout), cursor
+    set to the batch max; incremental: only rows past the persisted cursor,
+    merged by PK so re-delivered rows upsert (reference I3 late-data
+    handling); auto: seed until a cursor has been committed, incremental
+    after. The watermark is the max of the loaded delta, and the cursor
+    commits AFTER the warehouse write (data, then merge sidecar, then
+    cursor). A failed run re-delivers: a crash before the first cursor
+    commit makes an ``auto`` rerun seed again, and a later one re-merges
+    the same delta, which the PK merge absorbs.
     """
     state_path = f"{warehouse_path}__cursor"
+    prev = read_cursor(spark, state_path)
+    if mode == "auto":
+        mode = "seed" if prev is None else "incremental"
     if mode == "seed":
         delta = source
     elif mode == "incremental":
-        delta = cursor_incremental_batch(spark, source, cursor_col, state_path)
+        delta = source if prev is None else source.filter(F.col(cursor_col) > F.lit(prev))
     else:
-        raise ValueError(f"unknown mode {mode!r}; use 'seed' or 'incremental'")
-    n = delta.count()
+        raise ValueError(f"unknown mode {mode!r}; use 'seed', 'incremental' or 'auto'")
+    n, new_max = delta.agg(F.count(F.lit(1)), F.max(cursor_col)).first()
     if mode == "seed":
-        delta.write.mode("overwrite").parquet(warehouse_path)
+        _write_merge_layout(delta, warehouse_path, keys, version_col=cursor_col)
     else:
         merge_by_key(spark, delta, warehouse_path, keys=keys, version_col=cursor_col)
-    # Durable write finished — now advance the watermark (never backwards).
-    new_max = source.agg(F.max(cursor_col).alias("cursor")).first()["cursor"]
-    prev = read_cursor(spark, state_path)
-    if cursor_advanced(new_max, prev):
-        commit_cursor(spark, state_path, new_max)
+    commit_cursor(spark, state_path, new_max)
     total = spark.read.parquet(warehouse_path).count()
     return LoadResult(mode=mode, rows_loaded=n, target_rows=total)

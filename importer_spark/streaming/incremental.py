@@ -2,10 +2,11 @@
 
 The reference is batch-only; its incremental machinery maps to:
   I1 cursor-based extract  → ``cursor_incremental_batch`` (rows past the
-     watermark table's cursor; the caller advances it with ``commit_cursor``
-     after a durable write) or ``stream_events`` (Structured Streaming file
-     source, whose checkpoint gives exactly-once the reference hand-rolls
-     via a JSON ledger — orchestrator.py:34-141).
+     cursor in a one-value JSON state file; the caller advances it with
+     ``commit_cursor`` after a durable write) or ``stream_events``
+     (Structured Streaming file source, whose checkpoint gives
+     exactly-once the reference hand-rolls via a JSON ledger —
+     orchestrator.py:34-141).
   I2 snapshot append       → io.snapshot_append.
   I3 merge upsert          → io.merge_by_key.
 
@@ -17,10 +18,14 @@ add the late-data semantics the reference lacks.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from importer_spark.functions import dec, out_double
+from importer_spark.txn import _dec_stat, _enc_stat, write_json_atomic
 
 
 def stream_events(spark: SparkSession, path: str, schema) -> DataFrame:
@@ -54,40 +59,34 @@ def windowed_event_counts(
 
 
 def read_cursor(spark: SparkSession, state_path: str):
-    """Read the persisted high-watermark (None if no state yet). Only a
-    missing path counts as 'no state' — other read errors propagate."""
-    from importer_spark.io import read_parquet_if_exists
-
-    state = read_parquet_if_exists(spark, state_path)
-    if state is None:
-        return None
-    row = state.first()
-    return None if row is None else row["cursor"]
-
-
-def cursor_advanced(new_value, prev) -> bool:
-    """True when ``new_value`` moves the watermark forward. Compares in the
-    cursor's NATIVE type (the state parquet preserves it): a string compare
-    would stall numeric cursors forever at e.g. 9 → 10 ('10' < '9')."""
-    if new_value is None:
-        return False
-    if prev is None:
-        return True
+    """The committed high-watermark, or None before the first commit. Reads
+    one small JSON file and runs no Spark job; the tagged encoding brings
+    dates, timestamps and decimals back in their native type. A directory
+    at ``state_path`` is a cursor in the older parquet format, which is
+    rejected: delete it and re-seed the source."""
+    if os.path.isdir(state_path):
+        raise ValueError(
+            f"{state_path} is a cursor in the old parquet format; delete it "
+            "and re-seed the source"
+        )
     try:
-        return new_value > prev
-    except TypeError:  # mixed/legacy state types: fall back to strings
-        return str(new_value) > str(prev)
+        with open(state_path) as fh:
+            return _dec_stat(json.load(fh)["cursor"])
+    except FileNotFoundError:
+        return None
 
 
 def commit_cursor(spark: SparkSession, state_path: str, value) -> None:
     """Persist the high-watermark. Call AFTER the delta has been durably
     consumed — committing first would skip the batch on a downstream
-    failure."""
+    failure. The file is replaced atomically, so a reader always finds the
+    old cursor or the new one."""
     if value is None:
         return  # empty batch: keep the previous watermark
-    spark.createDataFrame([(value,)], ["cursor"]).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(state_path)
+    ok, encoded = _enc_stat(value)
+    if not ok:
+        raise TypeError(f"commit_cursor: cannot store a cursor of type {type(value).__name__}")
+    write_json_atomic(state_path, {"cursor": encoded})
 
 
 def cursor_incremental_batch(
@@ -98,8 +97,8 @@ def cursor_incremental_batch(
 ) -> DataFrame:
     """Cursor-based incremental extract (reference I1: dlt's ``updated_at``
     high-watermark, shopify_dlt/__init__.py:69-77): rows strictly past the
-    persisted cursor. State is a 1-row parquet — on a real deployment, a
-    table in the catalog.
+    persisted cursor. State is one JSON file holding the tagged cursor
+    value — on a real deployment, a table in the catalog.
 
     This only filters. The caller consumes the delta durably, then advances
     the watermark with ``commit_cursor`` (at-least-once; see

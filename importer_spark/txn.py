@@ -224,6 +224,34 @@ class TxnConflict(RuntimeError):
     only blind appends may auto-retry on top of a moved log)."""
 
 
+def _stage(directory: str, payload: bytes) -> str:
+    """Write ``payload`` to a fresh ``_tmp-*`` file in ``directory`` and
+    fsync it; the caller publishes it under its final name. Parquet readers
+    and the log listing both skip ``_``-prefixed names, so a stage file a
+    crash strands is never read."""
+    tmp = os.path.join(directory, f"_tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "wb") as fh:
+        fh.write(payload)
+        fh.flush()
+        os.fsync(fh.fileno())
+    return tmp
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Replace the small JSON file at ``path``: stage beside it, fsync, then
+    ``os.replace``. A reader sees the old file or the new one, never a torn
+    or missing one. Used for table state that is not a log entry: the merge
+    layout's ``_merge_meta.json`` and the load cursor."""
+    directory = os.path.dirname(os.path.abspath(path))
+    os.makedirs(directory, exist_ok=True)
+    tmp = _stage(directory, json.dumps(obj, sort_keys=True).encode())
+    try:
+        os.replace(tmp, path)
+    except BaseException:
+        os.remove(tmp)
+        raise
+
+
 class FilesystemLogStore:
     """Default log store: atomic put-if-absent via POSIX hard link (stage
     to a temp name, link to the final name — EEXIST means another writer
@@ -234,11 +262,7 @@ class FilesystemLogStore:
     def put_if_absent(self, directory: str, name: str, payload: bytes) -> bool:
         """True = this writer claimed ``name``; False = it already existed.
         Readers never observe a partial file either way."""
-        tmp = os.path.join(directory, f"_tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "wb") as fh:
-            fh.write(payload)
-            fh.flush()
-            os.fsync(fh.fileno())
+        tmp = _stage(directory, payload)
         try:
             os.link(tmp, os.path.join(directory, name))
             return True
@@ -523,9 +547,9 @@ class TxnTable:
           the column is dropped from stored rows).
 
         This simple form rewrites the whole snapshot through the log
-        (correct, atomic); the bucket-pruned rewrite in io.merge_by_key is
-        the targeted-IO variant and composes by committing only changed
-        buckets' files."""
+        (correct, atomic). io.merge_by_key is the targeted-IO variant on a
+        plain parquet directory (it rewrites only the key buckets a batch
+        touches); nothing commits those bucket rewrites through this log."""
         from pyspark.sql import functions as F
 
         def _dedup_plain(df: DataFrame) -> DataFrame:

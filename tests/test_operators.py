@@ -337,25 +337,36 @@ def test_cosine_pairs_blockwise_guard(spark):
         cosine_pairs_blockwise(e, "vec_id", "emb", threshold=0.9, max_broadcast_rows=3)
 
 
+def _bucket_file_hashes(root):
+    import hashlib
+
+    return {
+        str(f.relative_to(root)): hashlib.md5(f.read_bytes()).hexdigest()
+        for f in root.rglob("*.parquet")
+    }
+
+
+def _touched_buckets(before: dict, after: dict) -> set[str]:
+    """Bucket dirs with any file added, removed or changed."""
+    return {p.rsplit("/", 2)[-2] for p in set(before) ^ set(after)} | {
+        p.rsplit("/", 2)[-2] for p in before if before.get(p) != after.get(p)
+    }
+
+
+def _untouched(hashes: dict, touched: set[str]) -> dict:
+    return {p: h for p, h in hashes.items() if p.rsplit("/", 2)[-2] not in touched}
+
+
 def test_merge_rewrites_only_matched_partitions(spark, tmp_path):
     """The scale contract of merge_by_key: a merge touching one key must
     leave every unmatched bucket partition's files BYTE-IDENTICAL (same
     names, same contents) — cost proportional to matched buckets, not the
     table."""
-    import hashlib
-    from importer_spark.io import merge_by_key
-
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame([Row(k=i, v=f"v{i}", ver=1) for i in range(200)])
     merge_by_key(spark, base, path, keys=["k"], version_col="ver", n_buckets=8)
 
-    def snapshot():
-        return {
-            str(f.relative_to(tmp_path)): hashlib.md5(f.read_bytes()).hexdigest()
-            for f in (tmp_path / "tbl").rglob("*.parquet")
-        }
-
-    before = snapshot()
+    before = _bucket_file_hashes(tmp_path / "tbl")
     merge_by_key(
         spark,
         spark.createDataFrame([Row(k=7, v="updated", ver=2)]),
@@ -363,38 +374,60 @@ def test_merge_rewrites_only_matched_partitions(spark, tmp_path):
         keys=["k"],
         version_col="ver",
     )
-    after = snapshot()
-    touched_dirs = {p.rsplit("/", 2)[-2] for p in set(before) ^ set(after)} | {
-        p.rsplit("/", 2)[-2] for p in before if before.get(p) != after.get(p)
-    }
+    after = _bucket_file_hashes(tmp_path / "tbl")
+    touched_dirs = _touched_buckets(before, after)
     # exactly one bucket dir may differ; every other partition byte-identical
     assert len(touched_dirs) == 1, touched_dirs
-    untouched_before = {p: h for p, h in before.items() if p.rsplit("/", 2)[-2] not in touched_dirs}
-    untouched_after = {p: h for p, h in after.items() if p.rsplit("/", 2)[-2] not in touched_dirs}
-    assert untouched_before and untouched_before == untouched_after
+    untouched_before = _untouched(before, touched_dirs)
+    assert untouched_before and untouched_before == _untouched(after, touched_dirs)
     # and the merge semantics held
     out = {r.k: r.v for r in spark.read.parquet(path).collect()}
     assert out[7] == "updated" and len(out) == 200
 
 
-def test_merge_migrates_legacy_unpartitioned_target(spark, tmp_path):
-    """A pre-bucketing flat parquet target is migrated into the partitioned
-    layout on the next merge, preserving rows and upsert semantics."""
-    from importer_spark.io import merge_by_key
+def test_first_incremental_after_seed_rewrites_only_matched_buckets(spark, tmp_path):
+    """A seed load writes the merge layout itself, so the first incremental
+    batch is an ordinary bucket-pruned merge: buckets holding none of the
+    batch's keys keep their seed files byte-identical."""
+    from importer_spark.plans.pipeline import run_source_load
 
-    path = str(tmp_path / "legacy")
-    spark.createDataFrame([Row(k=1, v="a", ver=1), Row(k=2, v="b", ver=1)]).write.parquet(path)
-    merge_by_key(
-        spark,
-        spark.createDataFrame([Row(k=2, v="b2", ver=2), Row(k=3, v="c", ver=1)]),
-        path,
-        keys=["k"],
-        version_col="ver",
-        n_buckets=4,
+    wh = str(tmp_path / "wh")
+    seed = spark.createDataFrame(
+        [Row(id=i, v=f"v{i}", updated_at="2024-01-01") for i in range(300)]
     )
+    run_source_load(spark, seed, wh, keys=["id"], cursor_col="updated_at", mode="seed")
+    assert (tmp_path / "wh" / "_merge_meta.json").exists()
+    before = _bucket_file_hashes(tmp_path / "wh")
+    batch = spark.createDataFrame(
+        [Row(id=5, v="late", updated_at="2024-01-02"), Row(id=1000, v="new", updated_at="2024-01-02")]
+    )
+    res = run_source_load(spark, batch, wh, keys=["id"], cursor_col="updated_at", mode="incremental")
+    after = _bucket_file_hashes(tmp_path / "wh")
+    touched = _touched_buckets(before, after)
+    assert 1 <= len(touched) <= 2, touched
+    untouched = _untouched(before, touched)
+    assert untouched and untouched == _untouched(after, touched)
+    assert (res.rows_loaded, res.target_rows) == (2, 301)
+    out = {r.id: r.v for r in spark.read.parquet(wh).collect()}
+    assert out[5] == "late" and out[1000] == "new"
+
+
+def test_merge_rejects_flat_target(spark, tmp_path):
+    """A target without the merge sidecar (a flat parquet table, e.g. a seed
+    written by an older release) is not migrated: the merge refuses and
+    says to re-seed, leaving the table as it was."""
+    path = str(tmp_path / "flat")
+    spark.createDataFrame([Row(k=1, v="a", ver=1), Row(k=2, v="b", ver=1)]).write.parquet(path)
+    with pytest.raises(ValueError, match="re-seed"):
+        merge_by_key(
+            spark,
+            spark.createDataFrame([Row(k=2, v="b2", ver=2)]),
+            path,
+            keys=["k"],
+            version_col="ver",
+        )
     out = {r.k: r.v for r in spark.read.parquet(path).collect()}
-    assert out == {1: "a", 2: "b2", 3: "c"}
-    assert any(d.name.startswith("_kb=") for d in (tmp_path / "legacy").iterdir())
+    assert out == {1: "a", 2: "b"}
 
 
 def test_ivf_trained_quantizer_recall(spark):

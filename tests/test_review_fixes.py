@@ -4,6 +4,9 @@ types, pagination must not spin on stuck cursors."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -217,20 +220,42 @@ def test_sample_frames_chunks_bytes_for_multibyte_text(spark):
     assert got == sorted(want)
 
 
-def test_cursor_advanced_numeric_and_string(spark):
-    """Numeric cursors must compare numerically (lexicographic '10'<'9'
-    stalled the watermark forever); strings still compare as strings."""
-    from importer_spark.streaming.incremental import (
-        commit_cursor,
-        cursor_advanced,
-        read_cursor,
-    )
+@pytest.mark.parametrize(
+    "value",
+    [
+        datetime.date(2024, 2, 29),
+        datetime.datetime(2024, 2, 29, 23, 59, 58, 123456),
+        decimal.Decimal("12345.6700"),
+        10,
+        "2024-02",
+    ],
+    ids=["date", "naive_timestamp", "decimal", "int", "str"],
+)
+def test_cursor_types_round_trip(spark, tmp_path, value):
+    """The cursor file keeps the value's native type, so the next delta
+    filter compares numbers as numbers (a string compare would stall an int
+    cursor at 9 -> 10) and dates as dates. Reading and committing run no
+    Spark job."""
+    state = str(tmp_path / "cur")
+    sc = spark.sparkContext
+    sc.setJobGroup("cursor-round-trip", "cursor round trip")
+    try:
+        assert read_cursor(spark, state) is None
+        commit_cursor(spark, state, value)
+        got = read_cursor(spark, state)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == value and type(got) is type(value)
+    assert list(sc.statusTracker().getJobIdsForGroup("cursor-round-trip")) == []
+    # no stage file is left beside the cursor
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["cur"]
 
-    assert cursor_advanced(10, 9)
-    assert not cursor_advanced(9, 10)
-    assert cursor_advanced("2024-02", "2024-01")
-    assert not cursor_advanced(None, 5)
-    assert cursor_advanced(1, None)
+
+def test_old_parquet_cursor_is_rejected(spark, tmp_path):
+    state = str(tmp_path / "cur")
+    spark.createDataFrame([("2024-01-01",)], ["cursor"]).write.parquet(state)
+    with pytest.raises(ValueError, match="re-seed"):
+        read_cursor(spark, state)
 
 
 def test_rest_source_numeric_cursor_pagination(spark):

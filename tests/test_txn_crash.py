@@ -216,3 +216,77 @@ def test_writer_death_between_data_stage_and_publish(spark, tmp_path):
     removed = t.vacuum(retain_from_version=0)
     assert sorted(os.path.basename(r) for r in removed) == sorted(orphan_names)
     assert t.read().count() == 6
+
+
+# The `pipeline` front door's crash window: a source load dies after its
+# data write (and merge sidecar) and before its cursor commit. The child
+# runs the real run_source_load in ``auto`` mode with commit_cursor hooked
+# to ``os._exit(137)`` on the crashing batch.
+_LOAD_CHILD = r"""
+import os, sys
+sys.path.insert(0, sys.argv[1])
+wh, crash_batch, batches = sys.argv[2], int(sys.argv[3]), sys.argv[4:]
+
+from importer_spark.plans import pipeline
+from importer_spark.session import get_spark
+
+spark = get_spark(app_name="load-crash-child", master="local[1]", shuffle_partitions=2)
+for i, src in enumerate(batches):
+    if i == crash_batch:
+        pipeline.commit_cursor = lambda *a, **k: os._exit(137)
+    pipeline.run_source_load(
+        spark, spark.read.parquet(src), wh, keys=["id"], cursor_col="updated_at", mode="auto"
+    )
+os._exit(0)  # unreachable: the last batch crashes
+"""
+
+_LOAD_BATCHES = [
+    [(1, "a", "2024-01-01"), (2, "b", "2024-01-02")],
+    # a late update of id 2, a new id 3, and a stale re-delivery of id 1
+    [(2, "b2", "2024-01-05"), (3, "c", "2024-01-06"), (1, "a", "2024-01-01")],
+]
+
+
+@pytest.mark.parametrize("crash_batch", [0, 1], ids=["seed", "incremental"])
+def test_source_load_crash_before_cursor_commit_reruns_to_same_state(
+    spark, tmp_path, crash_batch
+):
+    """After the crash the table holds the batch but the cursor does not;
+    an ``auto`` rerun re-delivers that batch (seeding again when no cursor
+    was ever committed) and ends with the same rows and the same cursor as
+    a run that never crashed."""
+    from importer_spark.plans.pipeline import run_source_load
+    from importer_spark.streaming.incremental import read_cursor
+
+    batches = []
+    for i, rows in enumerate(_LOAD_BATCHES):
+        p = str(tmp_path / f"batch{i}")
+        spark.createDataFrame(rows, "id int, v string, updated_at string").write.parquet(p)
+        batches.append(p)
+
+    def load(wh, batch):
+        return run_source_load(
+            spark, spark.read.parquet(batch), wh, keys=["id"], cursor_col="updated_at", mode="auto"
+        )
+
+    def state(wh):
+        rows = sorted(tuple(r) for r in spark.read.parquet(wh).select("id", "v", "updated_at").collect())
+        return rows, read_cursor(spark, wh + "__cursor")
+
+    crashed = str(tmp_path / "crashed" / "src")
+    proc = subprocess.run(
+        [sys.executable, "-c", _LOAD_CHILD, REPO, crashed, str(crash_batch), *batches[: crash_batch + 1]],
+        capture_output=True,
+        text=True,
+    )
+    assert proc.returncode == 137, proc.stderr[-2000:]
+    assert os.path.exists(os.path.join(crashed, "_merge_meta.json"))
+    assert read_cursor(spark, crashed + "__cursor") == (None, "2024-01-02")[crash_batch]
+
+    rerun = [load(crashed, b) for b in batches[crash_batch:]]
+    assert rerun[0].mode == ("seed", "incremental")[crash_batch]
+
+    clean = str(tmp_path / "clean" / "src")
+    assert [load(clean, b).mode for b in batches] == ["seed", "incremental"]
+    assert state(crashed) == state(clean)
+    assert state(clean) == ([(1, "a", "2024-01-01"), (2, "b2", "2024-01-05"), (3, "c", "2024-01-06")], "2024-01-06")
