@@ -7,10 +7,11 @@ rewrite below is the storage-agnostic equivalent).
 
 A merge table has one layout from its first write on: parquet partitioned
 by the key bucket ``_kb``, plus a ``_merge_meta.json`` sidecar (bucket
-count and keys) replaced atomically beside the data. ``merge_by_key``
-creates it for a new table, and a seed load (plans/pipeline.py) replaces a
-table with it, so every later incremental merge rewrites only the buckets
-its batch touches.
+count and keys). ``merge_by_key`` creates it for a new table, and a seed
+load (plans/pipeline.py) replaces a table with it, both by renaming a staged
+directory holding data and sidecar, so every later incremental merge
+rewrites only the buckets its batch touches. The sidecar is kept with ``os``
+calls: the path must be a POSIX path (``txn.require_local_path``).
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from importer_spark.txn import write_json_atomic
+from importer_spark.txn import require_local_path, write_json_atomic
 
 
 def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
@@ -383,14 +384,6 @@ def _bucket_file_counts(path: str) -> dict[int, int]:
     }
 
 
-def _read_merge_meta(path: str) -> dict | None:
-    try:
-        with open(os.path.join(path, _MERGE_META)) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return None
-
-
 def _bucket_expr(keys: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
 
@@ -411,16 +404,20 @@ def _write_merge_layout(
     bucket_keys: list[str] | None = None,
 ) -> None:
     """Replace ``path`` with ``source`` (one row per key) in the merge
-    layout: data partitioned by ``_kb``, then ``_merge_meta.json`` written
-    atomically. How ``merge_by_key`` creates a table and how a seed load
-    replaces one."""
+    layout: ``_kb``-partitioned data and ``_merge_meta.json`` are staged,
+    then renamed to ``path``, which never holds data without its sidecar.
+    How ``merge_by_key`` creates a table and a seed load replaces one."""
     bucket_keys = list(bucket_keys or keys)
     result = _resolve_winners(_keyed(source, bucket_keys, n_buckets), keys, version_col)
-    result.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
+    staging = f"{path}__staging"
+    result.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
     write_json_atomic(
-        os.path.join(path, _MERGE_META),
+        os.path.join(staging, _MERGE_META),
         {"n_buckets": n_buckets, "keys": list(keys), "bucket_keys": bucket_keys},
     )
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.rename(staging, path)
 
 
 def merge_by_key(
@@ -472,8 +469,8 @@ def merge_by_key(
             f"merge_by_key: bucket_keys={bucket_keys} must be a prefix of "
             f"keys={list(keys)} (equal PKs must share a bucket)"
         )
-    meta = _read_merge_meta(path)
-    if meta is None:
+    meta_path = os.path.join(require_local_path(path), _MERGE_META)
+    if not os.path.exists(meta_path):
         if os.path.exists(path):
             raise ValueError(
                 f"merge_by_key: {path} has no {_MERGE_META}, so it is not in "
@@ -481,6 +478,8 @@ def merge_by_key(
             )
         _write_merge_layout(source, path, keys, version_col, n_buckets, bucket_keys)
         return
+    with open(meta_path) as fh:
+        meta = json.load(fh)
     meta.setdefault("bucket_keys", meta["keys"])  # sidecars written before bucket_keys
     if list(meta["keys"]) != list(keys) or list(meta["bucket_keys"]) != list(bucket_keys):
         # The physical layout hashes the ORIGINAL bucket keys; merging
@@ -531,7 +530,7 @@ def compact_merged_table(
     task per compacted bucket → one output file (``max_records_per_file``
     re-splits genuinely oversized buckets). Returns
     {bucket: (files_before, files_after)} for the compacted partitions."""
-    stats = _bucket_file_counts(path)
+    stats = _bucket_file_counts(require_local_path(path))
     affected = sorted(b for b, n in stats.items() if n > max_files_per_partition)
     if not affected:
         return {}
@@ -560,9 +559,15 @@ def compact_merged_table(
 
 
 def _resolve_winners(merged: DataFrame, keys: list[str], version_col: str | None) -> DataFrame:
+    """One row per key: highest ``version_col``, then source over target,
+    then the smallest other column values (unorderable map/variant columns
+    skipped), so a tie never depends on row order."""
     order = [F.col("_merge_rank").asc()]
     if version_col:
         order = [F.col(version_col).desc_nulls_last(), *order]
+    skip = {*keys, version_col, "_merge_rank", BUCKET_COL}
+    order += [F.col(f.name).asc_nulls_first() for f in merged.schema.fields
+              if f.name not in skip and not re.search("map<|variant", f.dataType.simpleString())]
     w = Window.partitionBy(*keys).orderBy(*order)
     return (
         merged.withColumn("_rn", F.row_number().over(w))

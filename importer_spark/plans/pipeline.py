@@ -10,13 +10,14 @@ source table.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from importer_spark.io import _write_merge_layout, merge_by_key
-from importer_spark.streaming.incremental import commit_cursor, read_cursor
+from importer_spark.streaming.incremental import commit_cursor, read_cursor, rows_past_cursor
 
 
 @dataclass
@@ -40,24 +41,22 @@ def run_source_load(
     set to the batch max; incremental: only rows past the persisted cursor,
     merged by PK so re-delivered rows upsert (reference I3 late-data
     handling); auto: seed until a cursor has been committed, incremental
-    after. The watermark is the max of the loaded delta, and the cursor
-    commits AFTER the warehouse write (data, then merge sidecar, then
-    cursor). A failed run re-delivers: a crash before the first cursor
-    commit makes an ``auto`` rerun seed again, and a later one re-merges
-    the same delta, which the PK merge absorbs.
+    after. The watermark is the max of the loaded delta. A seed deletes the
+    old cursor first and every load commits it AFTER the warehouse write, so
+    a crashed seed reruns as a seed and a crashed incremental load re-merges
+    its delta, which the PK merge absorbs.
     """
     state_path = f"{warehouse_path}__cursor"
     prev = read_cursor(spark, state_path)
     if mode == "auto":
         mode = "seed" if prev is None else "incremental"
-    if mode == "seed":
-        delta = source
-    elif mode == "incremental":
-        delta = source if prev is None else source.filter(F.col(cursor_col) > F.lit(prev))
-    else:
+    if mode not in ("seed", "incremental"):
         raise ValueError(f"unknown mode {mode!r}; use 'seed', 'incremental' or 'auto'")
+    delta = source if mode == "seed" else rows_past_cursor(source, cursor_col, prev)
     n, new_max = delta.agg(F.count(F.lit(1)), F.max(cursor_col)).first()
     if mode == "seed":
+        if prev is not None:
+            os.remove(state_path)
         _write_merge_layout(delta, warehouse_path, keys, version_col=cursor_col)
     else:
         merge_by_key(spark, delta, warehouse_path, keys=keys, version_col=cursor_col)

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from importer_spark.functions import dec, out_double
-from importer_spark.txn import _dec_stat, _enc_stat, write_json_atomic
+from importer_spark.txn import _dec_stat, _enc_stat, require_local_path, write_json_atomic
 
 
 def stream_events(spark: SparkSession, path: str, schema) -> DataFrame:
@@ -64,7 +64,7 @@ def read_cursor(spark: SparkSession, state_path: str):
     dates, timestamps and decimals back in their native type. A directory
     at ``state_path`` is a cursor in the older parquet format, which is
     rejected: delete it and re-seed the source."""
-    if os.path.isdir(state_path):
+    if os.path.isdir(require_local_path(state_path)):
         raise ValueError(
             f"{state_path} is a cursor in the old parquet format; delete it "
             "and re-seed the source"
@@ -86,7 +86,7 @@ def commit_cursor(spark: SparkSession, state_path: str, value) -> None:
     ok, encoded = _enc_stat(value)
     if not ok:
         raise TypeError(f"commit_cursor: cannot store a cursor of type {type(value).__name__}")
-    write_json_atomic(state_path, {"cursor": encoded})
+    write_json_atomic(require_local_path(state_path), {"cursor": encoded})
 
 
 def cursor_incremental_batch(
@@ -103,7 +103,11 @@ def cursor_incremental_batch(
     This only filters. The caller consumes the delta durably, then advances
     the watermark with ``commit_cursor`` (at-least-once; see
     plans/pipeline.py::run_source_load)."""
-    prev = read_cursor(spark, state_path)
+    return rows_past_cursor(source, cursor_col, read_cursor(spark, state_path))
+
+
+def rows_past_cursor(source: DataFrame, cursor_col: str, prev) -> DataFrame:
+    """Rows of ``source`` with ``cursor_col`` past ``prev`` (all when None)."""
     return source if prev is None else source.filter(F.col(cursor_col) > F.lit(prev))
 
 

@@ -46,6 +46,7 @@ import datetime
 import decimal
 import json
 import os
+import re
 import threading
 import uuid
 
@@ -235,6 +236,15 @@ def _stage(directory: str, payload: bytes) -> str:
         fh.flush()
         os.fsync(fh.fileno())
     return tmp
+
+
+def require_local_path(path: str) -> str:
+    """``path``, or a ValueError for a URI (``hdfs://``, ``s3a://``,
+    ``file:/``): merge sidecars and load cursors use ``os`` calls on the
+    driver, which would take a URI for a missing file and replace the table."""
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path):
+        raise ValueError(f"{path}: merge tables and load cursors need a POSIX path, not a URI")
+    return path
 
 
 def write_json_atomic(path: str, obj) -> None:

@@ -3,6 +3,8 @@ multimodal stubs, quality assertions, as-of edge cases."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -428,6 +430,53 @@ def test_merge_rejects_flat_target(spark, tmp_path):
         )
     out = {r.k: r.v for r in spark.read.parquet(path).collect()}
     assert out == {1: "a", 2: "b"}
+
+
+@pytest.mark.parametrize("uri", ["hdfs://nn/wh/src", "s3a://bucket/wh/src", "file:/tmp/wh/src"])
+def test_merge_table_and_cursor_reject_uri_paths(spark, uri):
+    """The sidecar and the cursor live on the driver's filesystem, where a
+    scheme-qualified path reads as missing; the merge would then replace
+    the real table. Every entry point refuses such a path before any
+    write."""
+    from importer_spark.io import compact_merged_table
+    from importer_spark.plans.pipeline import run_source_load
+    from importer_spark.streaming.incremental import commit_cursor, read_cursor
+
+    batch = spark.createDataFrame([Row(k=1, v="a", ver=1)])
+    calls = [
+        lambda: merge_by_key(spark, batch, uri, keys=["k"], version_col="ver"),
+        lambda: compact_merged_table(spark, uri),
+        lambda: read_cursor(spark, uri + "__cursor"),
+        lambda: commit_cursor(spark, uri + "__cursor", 1),
+        lambda: run_source_load(spark, batch, uri, keys=["k"], cursor_col="ver", mode="seed"),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="POSIX path"):
+            call()
+    assert not os.path.exists(uri.split(":", 1)[0] + ":")
+
+
+def test_merge_ties_resolve_the_same_in_any_row_order(spark, tmp_path):
+    """Two rows with the same key and the same version: the smaller value of
+    the other columns wins, whatever order the rows arrive in, so a seed run
+    twice gives the same table."""
+    from importer_spark.plans.pipeline import run_source_load
+
+    rows = [Row(id=1, v="y", updated_at="2024-01-01"), Row(id=1, v="x", updated_at="2024-01-01")]
+    wins = set()
+    for i, order in enumerate((rows, rows[::-1])):
+        wh = str(tmp_path / f"wh{i}")
+        run_source_load(
+            spark, spark.createDataFrame(order).coalesce(1), wh,
+            keys=["id"], cursor_col="updated_at", mode="seed",
+        )
+        wins |= {r.v for r in spark.read.parquet(wh).collect()}
+        merge_by_key(
+            spark, spark.createDataFrame(order[::-1]).coalesce(1), wh,
+            keys=["id"], version_col="updated_at",
+        )
+        wins |= {r.v for r in spark.read.parquet(wh).collect()}
+    assert wins == {"x"}
 
 
 def test_ivf_trained_quantizer_recall(spark):

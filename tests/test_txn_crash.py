@@ -218,26 +218,35 @@ def test_writer_death_between_data_stage_and_publish(spark, tmp_path):
     assert t.read().count() == 6
 
 
-# The `pipeline` front door's crash window: a source load dies after its
-# data write (and merge sidecar) and before its cursor commit. The child
-# runs the real run_source_load in ``auto`` mode with commit_cursor hooked
-# to ``os._exit(137)`` on the crashing batch.
+# The `pipeline` front door's crash windows. The child runs the real loads
+# in order ("<mode>=<batch path>"; mode "merge" is a direct merge_by_key)
+# and dies with ``os._exit(137)`` in the last one: at its cursor commit
+# ("cursor"), or after its data write and before its merge sidecar is
+# written ("sidecar").
 _LOAD_CHILD = r"""
 import os, sys
 sys.path.insert(0, sys.argv[1])
-wh, crash_batch, batches = sys.argv[2], int(sys.argv[3]), sys.argv[4:]
+wh, crash_at, loads = sys.argv[2], sys.argv[3], sys.argv[4:]
 
+from importer_spark import io
 from importer_spark.plans import pipeline
 from importer_spark.session import get_spark
 
 spark = get_spark(app_name="load-crash-child", master="local[1]", shuffle_partitions=2)
-for i, src in enumerate(batches):
-    if i == crash_batch:
-        pipeline.commit_cursor = lambda *a, **k: os._exit(137)
-    pipeline.run_source_load(
-        spark, spark.read.parquet(src), wh, keys=["id"], cursor_col="updated_at", mode="auto"
-    )
-os._exit(0)  # unreachable: the last batch crashes
+for i, load in enumerate(loads):
+    mode, src = load.split("=", 1)
+    if i == len(loads) - 1:
+        die = lambda *a, **k: os._exit(137)
+        if crash_at == "cursor":
+            pipeline.commit_cursor = die
+        else:
+            io.write_json_atomic = die
+    df = spark.read.parquet(src)
+    if mode == "merge":
+        io.merge_by_key(spark, df, wh, keys=["id"], version_col="updated_at")
+    else:
+        pipeline.run_source_load(spark, df, wh, keys=["id"], cursor_col="updated_at", mode=mode)
+os._exit(0)  # unreachable: the last load crashes
 """
 
 _LOAD_BATCHES = [
@@ -245,48 +254,97 @@ _LOAD_BATCHES = [
     # a late update of id 2, a new id 3, and a stale re-delivery of id 1
     [(2, "b2", "2024-01-05"), (3, "c", "2024-01-06"), (1, "a", "2024-01-01")],
 ]
+_FINAL_ROWS = [(1, "a", "2024-01-01"), (2, "b2", "2024-01-05"), (3, "c", "2024-01-06")]
+
+
+@pytest.fixture
+def load_batches(spark, tmp_path):
+    paths = []
+    for i, rows in enumerate(_LOAD_BATCHES):
+        p = str(tmp_path / f"batch{i}")
+        spark.createDataFrame(rows, "id int, v string, updated_at string").write.parquet(p)
+        paths.append(p)
+    return paths
+
+
+def _crash_child(wh, crash_at, loads):
+    proc = subprocess.run(
+        [sys.executable, "-c", _LOAD_CHILD, REPO, wh, crash_at, *loads],
+        capture_output=True,
+        text=True,
+    )
+    assert proc.returncode == 137, proc.stderr[-2000:]
+
+
+def _load(spark, wh, batch, mode="auto"):
+    from importer_spark.plans.pipeline import run_source_load
+
+    return run_source_load(
+        spark, spark.read.parquet(batch), wh, keys=["id"], cursor_col="updated_at", mode=mode
+    )
+
+
+def _state(spark, wh):
+    from importer_spark.streaming.incremental import read_cursor
+
+    rows = sorted(tuple(r) for r in spark.read.parquet(wh).select("id", "v", "updated_at").collect())
+    return rows, read_cursor(spark, wh + "__cursor")
 
 
 @pytest.mark.parametrize("crash_batch", [0, 1], ids=["seed", "incremental"])
 def test_source_load_crash_before_cursor_commit_reruns_to_same_state(
-    spark, tmp_path, crash_batch
+    spark, tmp_path, load_batches, crash_batch
 ):
     """After the crash the table holds the batch but the cursor does not;
     an ``auto`` rerun re-delivers that batch (seeding again when no cursor
     was ever committed) and ends with the same rows and the same cursor as
     a run that never crashed."""
-    from importer_spark.plans.pipeline import run_source_load
     from importer_spark.streaming.incremental import read_cursor
 
-    batches = []
-    for i, rows in enumerate(_LOAD_BATCHES):
-        p = str(tmp_path / f"batch{i}")
-        spark.createDataFrame(rows, "id int, v string, updated_at string").write.parquet(p)
-        batches.append(p)
-
-    def load(wh, batch):
-        return run_source_load(
-            spark, spark.read.parquet(batch), wh, keys=["id"], cursor_col="updated_at", mode="auto"
-        )
-
-    def state(wh):
-        rows = sorted(tuple(r) for r in spark.read.parquet(wh).select("id", "v", "updated_at").collect())
-        return rows, read_cursor(spark, wh + "__cursor")
-
     crashed = str(tmp_path / "crashed" / "src")
-    proc = subprocess.run(
-        [sys.executable, "-c", _LOAD_CHILD, REPO, crashed, str(crash_batch), *batches[: crash_batch + 1]],
-        capture_output=True,
-        text=True,
-    )
-    assert proc.returncode == 137, proc.stderr[-2000:]
+    _crash_child(crashed, "cursor", [f"auto={b}" for b in load_batches[: crash_batch + 1]])
     assert os.path.exists(os.path.join(crashed, "_merge_meta.json"))
     assert read_cursor(spark, crashed + "__cursor") == (None, "2024-01-02")[crash_batch]
 
-    rerun = [load(crashed, b) for b in batches[crash_batch:]]
+    rerun = [_load(spark, crashed, b) for b in load_batches[crash_batch:]]
     assert rerun[0].mode == ("seed", "incremental")[crash_batch]
 
     clean = str(tmp_path / "clean" / "src")
-    assert [load(clean, b).mode for b in batches] == ["seed", "incremental"]
-    assert state(crashed) == state(clean)
-    assert state(clean) == ([(1, "a", "2024-01-01"), (2, "b2", "2024-01-05"), (3, "c", "2024-01-06")], "2024-01-06")
+    assert [_load(spark, clean, b).mode for b in load_batches] == ["seed", "incremental"]
+    assert _state(spark, crashed) == _state(spark, clean)
+    assert _state(spark, clean) == (_FINAL_ROWS, "2024-01-06")
+
+
+def test_reseed_crash_before_merge_sidecar_reruns_to_same_state(spark, tmp_path, load_batches):
+    """A source with a committed cursor is re-seeded, and the seed dies after
+    its data write and before its merge sidecar. The seed deleted the
+    cursor first and stages data and sidecar away from the table, so the
+    table is still the old one and an ``auto`` rerun seeds again, ending
+    where an uninterrupted re-seed ends."""
+    from importer_spark.streaming.incremental import read_cursor
+
+    crashed = str(tmp_path / "crashed" / "src")
+    b0, b1 = load_batches
+    _crash_child(crashed, "sidecar", [f"auto={b0}", f"seed={b1}"])
+    assert read_cursor(spark, crashed + "__cursor") is None
+    assert _state(spark, crashed)[0] == sorted(_LOAD_BATCHES[0])
+
+    assert _load(spark, crashed, b1).mode == "seed"
+    clean = str(tmp_path / "clean" / "src")
+    assert [_load(spark, clean, b0).mode, _load(spark, clean, b1, "seed").mode] == ["seed", "seed"]
+    assert _state(spark, crashed) == _state(spark, clean)
+    assert _state(spark, clean) == (_FINAL_ROWS, "2024-01-06")
+
+
+def test_merge_create_crash_before_sidecar_leaves_no_table(spark, tmp_path, load_batches):
+    """A direct merge_by_key that creates its table dies after the data
+    write and before the sidecar: the table does not exist yet, so the
+    next merge creates it."""
+    from importer_spark.io import merge_by_key
+
+    crashed = str(tmp_path / "crashed" / "src")
+    _crash_child(crashed, "sidecar", [f"merge={load_batches[0]}"])
+    assert not os.path.exists(crashed)
+    for b in load_batches:
+        merge_by_key(spark, spark.read.parquet(b), crashed, keys=["id"], version_col="updated_at")
+    assert _state(spark, crashed)[0] == _FINAL_ROWS
